@@ -12,19 +12,13 @@ embedding-space passes a 100 TB curation pipeline runs:
   pass that removes *semantically* identical documents exact and
   MinHash dedup both miss.
 
-Determinism contract (same result at any parallelism / partitioning):
-- init = the k vectors with the smallest ids (no RNG);
-- assignment: squared-L2 argmin, ties -> lowest cluster index
-  (numpy argmin semantics), computed per-row from broadcast centroids;
-- centroid recompute: per-(cluster, dim) **exact decimal sums**
-  (functions/numeric.dsum) divided by counts — order-insensitive where
-  a float sum would drift with partitioning;
-- empty clusters keep their previous centroid.
-
-Scale notes: each Lloyd iteration is one Arrow-batched assignment pass
-(k*dim broadcast, no shuffle) plus one hash aggregate of (cluster, dim)
-partial sums — map-side combinable, k*dim result rows regardless of
-input size. The gram-matrix dedup runs per cluster via applyInPandas;
+k-means is product quantization with one subspace: ``kmeans_fit`` is
+``pq.pq_train(m=1)``, and ``kmeans_assign`` runs pq's squared-L2 argmin
+kernel, so there is one Lloyd loop and one assignment kernel in the
+package. The determinism contract (smallest-id init, argmin ties to
+the lowest cluster index, exact decimal centroid sums, empty clusters
+keep their centroid) and the per-iteration scale shape are pq.py's.
+The gram-matrix dedup runs per cluster via applyInPandas;
 clusters are size-bounded by k, and a hot cluster splits with a salt the
 same way embedding_near_dups_arrow's buckets do.
 """
@@ -40,23 +34,7 @@ from pyspark.sql import types as T
 
 from ..functions.numeric import dsum, floor6
 from .dedup import dedup_clusters
-
-
-def _assign_udf(centroids: list[list[float]]):
-    """Scalar pandas UDF: nearest-centroid index (squared L2, ties ->
-    lowest index) from a driver-broadcast centroid matrix."""
-    from pyspark.sql.functions import pandas_udf
-
-    c = np.array(centroids, dtype=np.float64)  # k x dim
-
-    @pandas_udf(T.IntegerType())
-    def assign(vecs: pd.Series) -> pd.Series:
-        m = np.array(list(vecs), dtype=np.float64)  # n x dim
-        # ||x-c||^2 = ||x||^2 - 2x.c + ||c||^2; ||x||^2 constant per row
-        d = -2.0 * (m @ c.T) + (c * c).sum(axis=1)[None, :]
-        return pd.Series(np.argmin(d, axis=1).astype("int32"))
-
-    return assign
+from .pq import _pq_assign_udf, pq_train
 
 
 def _dist_udf(centroids: list[list[float]]):
@@ -89,28 +67,11 @@ def kmeans_fit(
 ) -> list[list[float]]:
     """Lloyd's k-means; returns the k centroids (list of dim-length lists).
 
-    Deterministic by construction (module docstring); fixed ``n_iters``
+    Deterministic by construction (pq.py's contract); fixed ``n_iters``
     rather than a convergence probe so the job count is known up front
-    (inertia is non-increasing per iteration — pinned in tests)."""
-    init_rows = df.orderBy(id_col).limit(k).select(vec_col).collect()
-    centroids = [[float(x) for x in r[0]] for r in init_rows]
-    dim = len(centroids[0])
-    for _ in range(n_iters):
-        assigned = df.select(
-            F.col(vec_col).alias("v"),
-            _assign_udf(centroids)(F.col(vec_col)).alias("cluster"),
-        )
-        stats = (
-            assigned.select("cluster", F.posexplode("v").alias("d", "x"))
-            .groupBy("cluster", "d")
-            .agg(dsum("x").alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        new_c = [list(c) for c in centroids]  # empty cluster keeps old
-        for r in stats:
-            new_c[r["cluster"]][r["d"]] = r["s"] / r["n"]
-        centroids = new_c
-    return centroids
+    (inertia is non-increasing per iteration — pinned in tests). Raises
+    ValueError on fewer than k vectors."""
+    return pq_train(df, m=1, k=k, n_iters=n_iters, id_col=id_col, vec_col=vec_col)[0]
 
 
 def kmeans_assign(
@@ -120,7 +81,7 @@ def kmeans_assign(
     out_col: str = "cluster",
 ) -> DataFrame:
     return df.withColumn(
-        out_col, _assign_udf(centroids)(F.col(vec_col)).cast("int")
+        out_col, _pq_assign_udf([centroids])(F.lit(0), F.col(vec_col)).cast("int")
     )
 
 

@@ -34,6 +34,7 @@ from ..functions.text import fingerprint, shingles_from_tokens, tokens, word_shi
 
 
 from ..session import widen_to_parallelism as _widen_to_parallelism
+from .iterate import cut
 
 
 # ----------------------------------------------------------------- exact
@@ -398,27 +399,20 @@ def dedup_clusters(
         .agg(F.least(F.min("dst"), F.first("src")).alias("label"))
         .select(F.col("src").alias("id"), F.least("label", "src").alias("label"))
     )
-    from pyspark.sql import Observation
-
     for _ in range(max_iterations):
         # propagate: my new label = min(my label, labels of my neighbors).
         # The old label rides through the same aggregate (each id has
-        # exactly one self row), so convergence needs no extra join/job —
-        # the changed-probe is an OBSERVED METRIC collected by the very
-        # job that materializes the eager checkpoint (round 11: the
-        # previous per-iteration `filter(..).limit(1).count()` was a
-        # second job per round; observe folds it into the first —
-        # metrics ride task completion, so no extra pass). A speculative
-        # duplicate can only OVERCOUNT the nonnegative changed-sum,
-        # which at worst runs one harmless extra round — it can never
-        # fake convergence.
+        # exactly one self row), so convergence needs no extra join/job:
+        # the changed-count is observed on the cut's eager checkpoint job
+        # (iterate.cut). A speculative duplicate can only OVERCOUNT the
+        # nonnegative changed-sum, which at worst runs one harmless extra
+        # round — it can never fake convergence.
         neighbor_labels = (
             edges.join(labels, edges.dst == labels.id)
             .select(F.col("src").alias("id"), F.col("label"))
             .withColumn("is_self", F.lit(0))
         )
-        obs = Observation()
-        merged = (
+        merged, observed = cut(
             labels.withColumn("is_self", F.lit(1))
             .unionByName(neighbor_labels)
             .groupBy("id")
@@ -427,20 +421,16 @@ def dedup_clusters(
                 F.max(F.when(F.col("is_self") == 1, F.col("label"))).alias(
                     "old_label"
                 ),
-            )
-            .observe(
-                obs,
-                # coalesce: sum over an EMPTY relation observes NULL,
-                # which must read as converged (0), not loop forever
-                F.coalesce(
-                    F.sum((F.col("label") < F.col("old_label")).cast("long")),
-                    F.lit(0).cast("long"),
-                ).alias("changed"),
-            )
-            .localCheckpoint()  # eager: cut the iterative lineage
+            ),
+            # coalesce: sum over an EMPTY relation observes NULL, which
+            # must read as converged (0), not loop forever
+            changed=F.coalesce(
+                F.sum((F.col("label") < F.col("old_label")).cast("long")),
+                F.lit(0).cast("long"),
+            ),
         )
         labels = merged.select("id", "label")
-        if obs.get["changed"] == 0:
+        if observed["changed"] == 0:
             break
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 

@@ -14,24 +14,19 @@ double with identical expression shape every iteration.
 
 Scale: each iteration is one join (ranks x edges, shuffled on the
 edge source) plus one aggregate on the destination — the standard
-Pregel-as-joins shape. Ranks are localCheckpoint'd (eager) each
-iteration to stop lineage growth; the dangling-mass / normalizer
-1-row totals ride that SAME job as ``Observation`` metrics (round
-12 — the dedup_clusters convergence-probe pattern): previously each
-was a separate in-plan broadcast cross join whose build was its own
-job, doubling jobs per iteration. Exactness: the metrics are decimal
-sums (order-insensitive), and the observe node executes inside the
-checkpoint job's RESULT stage, where the scheduler ignores duplicate
-completions of an already-finished result partition (speculative or
-retried result tasks update accumulators at most once per partition
-— unlike shuffle-map stages, the known SQL-metrics double-count
-caveat does not apply) — so the literal fed into the next iteration
-is bit-equal to the old in-plan broadcast column."""
+Pregel-as-joins shape. Every loop cuts its state's lineage each
+iteration through iterate.cut; the dangling-mass / normalizer 1-row
+totals ride the cut's eager checkpoint job as observed metrics instead
+of each being a separate in-plan broadcast cross join whose build was
+its own job."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.numeric import dsum
+from .iterate import cut
 
 #: Decimal shape for rank mass: ranks are probabilities (<= 1), so all
 #: 25 digits serve the fraction; 18 fractional digits keeps round-off
@@ -52,8 +47,6 @@ def pagerank(
     of sources and destinations; dangling nodes (no out-edges)
     redistribute their mass uniformly, so total mass is conserved
     exactly (up to the documented decimal scale)."""
-    from pyspark.sql import Observation
-
     # checkpoint the edge relation ONCE (round 12): `nodes` and `shares`
     # below each eager-checkpoint a derivation of it, and an un-cut edge
     # plan — for the co-purchase callers a per-basket-quadratic
@@ -110,10 +103,8 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("c").cast("double").alias("inflow"))
         )
-        obs = Observation()
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
+        ranks, observed = cut(
+            nodes.join(contribs, "node", "left").select(
                 "node",
                 "__dang",
                 (
@@ -121,31 +112,18 @@ def pagerank(
                     + F.lit(damping) * F.lit(dmass) / F.lit(float(n))
                     + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
                 ).alias("rank"),
-            )
-            # next iteration's dangling mass rides the checkpoint job as
-            # an observed metric: exact decimal sum over the flagged rows
-            # — the same value set the old semi-join aggregate summed
-            # (sum skips the NULLs the `when` leaves on non-dangling
-            # rows), and decimal addition is order-insensitive.
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum(
-                        F.when(F.col("__dang"), F.col("rank").cast(_RANK_DEC))
-                    ).cast("double"),
-                    F.lit(0.0),
-                ).alias("dmass"),
-            )
-            # cut lineage EVERY iteration (round-11 measurement; round 12
-            # made the cut EAGER — the observed metric must be collected
-            # before the next iteration's plan is built, and the lazy
-            # variant was materialized by the next iteration's first job
-            # anyway). At scale an uncached level is a corpus-sized
-            # recompute, so one block-manager write per iteration is the
-            # cheap side of the trade.
-            .localCheckpoint(eager=True)
+            ),
+            # next iteration's dangling mass: exact decimal sum over the
+            # flagged rows (sum skips the NULLs the `when` leaves on
+            # non-dangling rows; decimal addition is order-insensitive).
+            dmass=F.coalesce(
+                F.sum(F.when(F.col("__dang"), F.col("rank").cast(_RANK_DEC))).cast(
+                    "double"
+                ),
+                F.lit(0.0),
+            ),
         )
-        dmass = obs.get["dmass"]
+        dmass = observed["dmass"]
     return ranks.select("node", "rank")
 
 
@@ -167,16 +145,11 @@ def hits(
     first) is unchanged. Fixed ``iterations`` → known job count.
 
     Scale: per iteration, two join+agg passes (edges x scores shuffled
-    on the join key); each side's sum-normalizer total rides the side's
-    eager checkpoint job as an ``Observation`` metric (round 12 — see
-    module docstring; previously a 1-row aggregate broadcast in-plan as
-    a cross join, whose build was an extra job per side). Lineage is
-    cut every iteration, exactly like pagerank; the normalizing
-    division is applied as a projection OVER the checkpointed raw sums
-    with the observed total as a literal — bit-equal to the old
-    broadcast column (same decimal sum, same double division)."""
-    from pyspark.sql import Observation
-
+    on the join key); each side's sum-normalizer total is observed on
+    the side's eager cut (module docstring). The normalizing division is
+    applied as a projection OVER the checkpointed raw sums with the
+    observed total as a literal — bit-equal to an in-plan broadcast
+    total (same decimal sum, same double division)."""
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
@@ -189,18 +162,14 @@ def hits(
     n_hubs = hub_nodes.count()
     h = hub_nodes.select("node", F.lit(1.0 / n_hubs).alias("score"))
     a = None
-    from ..functions.numeric import dsum
 
     def _normalized(raw: DataFrame, key: str) -> DataFrame:
-        """Checkpoint the raw per-node sums, observing their total on
-        the same job; normalize as a projection over the checkpoint."""
-        obs = Observation()
-        raw = raw.observe(obs, dsum("s", 18).alias("t")).localCheckpoint(
-            eager=True
-        )
+        """Cut the raw per-node sums, observing their total; normalize as
+        a projection over the checkpoint."""
+        raw, observed = cut(raw, t=dsum("s", 18))
         return raw.select(
             F.col(key).alias("node"),
-            (F.col("s") / F.lit(obs.get["t"])).alias("score"),
+            (F.col("s") / F.lit(observed["t"])).alias("score"),
         )
 
     for _ in range(iterations):
@@ -236,18 +205,18 @@ def label_propagation(
     at least one in-edge (true for symmetrized edge sets).
 
     Scale: one shuffle join (labels x edges on the source) + one
-    map-side-combinable (node, label) count + one per-node MAX-STRUCT
+    map-side-combinable (node, label) count + one per-node MIN-STRUCT
     argmax per iteration — Pregel-as-joins, same as pagerank/hits
-    above. The argmax is ``max(struct(c, -label))`` (round 12): struct
-    ordering compares c first, then -label, so ties break to the
-    SMALLEST label — exactly the previous ``row_number() OVER (ORDER BY
-    c DESC, label ASC) = 1`` window, but as a partially-aggregable
-    hash aggregate instead of a sort-based window (no per-partition
-    sort, and the second exchange carries one pre-merged row per
-    (node, map task) instead of every (node, label) pair). No driver
-    collect anywhere; labels are localCheckpoint'd (lazy) each
-    iteration to stop lineage growth. Returns (node, label) after
-    ``iterations`` rounds."""
+    above. The argmax is ``min(struct(-c, label))``: struct ordering
+    compares -c first, then the label itself, so ties break to the
+    SMALLEST label for any orderable label type (numeric or string ids)
+    — the ``row_number() OVER (ORDER BY c DESC, label ASC) = 1`` window,
+    but as a partially-aggregable hash aggregate instead of a sort-based
+    window (no per-partition sort, and the second exchange carries one
+    pre-merged row per (node, map task) instead of every (node, label)
+    pair). No driver collect anywhere; labels are cut lazily each
+    iteration (iterate.cut) to stop lineage growth. Returns (node,
+    label) after ``iterations`` rounds."""
     # checkpoint the edge relation ONCE (round-11): every iteration's
     # message join reads ``edges``, and an un-checkpointed edge plan —
     # for the co-purchase callers a per-basket-quadratic self-join —
@@ -269,15 +238,14 @@ def label_propagation(
             labels.withColumnRenamed("node", src), src
         ).select(F.col(dst).alias("node"), "label")
         counts = msgs.groupBy("node", "label").agg(F.count("*").alias("c"))
-        labels = (
+        labels, _ = cut(
             counts.groupBy("node")
             .agg(
-                F.max(
-                    F.struct(F.col("c"), (-F.col("label")).alias("nl"))
-                ).alias("__best")
+                F.min(F.struct((-F.col("c")).alias("nc"), F.col("label"))).alias(
+                    "__best"
+                )
             )
-            .select("node", (-F.col("__best.nl")).alias("label"))
-            .localCheckpoint(eager=False)
+            .select("node", F.col("__best.label").alias("label"))
         )
     return labels
 
@@ -319,13 +287,12 @@ def kcore(
             .groupBy("src")
             .agg(F.count("*").alias("degree"))
         )
-        alive = deg.filter(F.col("degree") >= k).select(
-            F.col("src").alias("node")
-        )
         # cut EVERY round (round-11): the alive set is referenced twice
         # per round (src and dst semi-joins), so an uncached round
         # re-executes — measured 2.7-3.1 s vs 2.4-2.7 s at sf0.1.
-        alive = alive.localCheckpoint(eager=False)
+        alive, _ = cut(
+            deg.filter(F.col("degree") >= k).select(F.col("src").alias("node"))
+        )
     return (
         e.join(alive.withColumnRenamed("node", "src"), "src")
         .join(alive.withColumnRenamed("node", "dst"), "dst")

@@ -11,9 +11,12 @@ codes. With m=8, k=16 a 64-dim float64 vector (512 B) becomes 8 nibbles
 (ADC: per-query lookup tables over the codebook) preserves approximate
 nearest-neighbor ranking without ever reconstructing the vectors.
 
+``pq_train`` holds the package's one Lloyd loop: plain k-means
+(clustering.kmeans_fit) is ``pq_train`` with ``m=1``, and
+clustering.kmeans_assign runs ``_pq_assign_udf``'s argmin kernel.
+
 Determinism contract (same result at any parallelism / partitioning):
-- init: per subspace, the sub-vectors of the k smallest ids (no RNG —
-  same rule as clustering.kmeans_fit);
+- init: per subspace, the sub-vectors of the k smallest ids (no RNG);
 - assignment: squared-L2 argmin, ties -> lowest code (numpy argmin);
 - centroid recompute: exact decimal sums per (subspace, code, dim)
   divided by counts (functions/numeric.dsum) — order-insensitive;

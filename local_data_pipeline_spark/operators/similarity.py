@@ -452,58 +452,14 @@ def ivf_topk(
     partition (mapInPandas); the search join is equi on cell id, so the
     corpus shuffles once by cell (or is bucketed by cell at write time and
     never re-shuffles). Recall rises with n_probe — the classic IVF knob."""
-    import numpy as np
-
-    cent_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(n_centroids)
-        .collect()
-    )
-    c_mat = np.array([r[1] for r in cent_rows], dtype=np.float64)
-    c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-    sc = corpus.sparkSession.sparkContext
-    bcent = sc.broadcast(c_mat)
-
-    def assign(n_cells: int):
-        def run(batches):
-            import pandas as pd
-
-            cm = bcent.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                m = np.array(list(pdf[vec_col]), dtype=np.float64)
-                m_n = m / np.linalg.norm(m, axis=1, keepdims=True)
-                sims = m_n @ cm.T  # |rows| x |centroids|
-                # n_cells nearest centroids per row (ties → lower cell id)
-                order = np.argsort(-sims, axis=1, kind="stable")[:, :n_cells]
-                n = len(pdf)
-                yield pd.DataFrame(
-                    {
-                        id_col: np.repeat(pdf[id_col].values, n_cells),
-                        vec_col: [
-                            v for v in pdf[vec_col] for _ in range(n_cells)
-                        ],
-                        "cell": order.ravel(),
-                    }
-                )
-
-        return run
-
-    corpus_cells = corpus.select(id_col, vec_col).mapInPandas(
-        assign(1), f"{id_col} long, {vec_col} array<float>, cell int"
-    )
-    query_cells = queries.select(id_col, vec_col).mapInPandas(
-        assign(n_probe), f"{id_col} long, {vec_col} array<float>, cell int"
-    )
-    cq = query_cells.select(
+    _, assign = _ivf_quantizer(corpus, n_centroids, id_col, vec_col)
+    cq = assign(queries, n_probe).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
         l2_norm(F.col(vec_col)).alias("q_norm"),
         "cell",
     )
-    cc = corpus_cells.select(
+    cc = assign(corpus, 1).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
         l2_norm(F.col(vec_col)).alias("c_norm"),
@@ -521,6 +477,61 @@ def ivf_topk(
         ).alias("cos_sim"),
     ).distinct()  # a (query, neighbor) pair can meet in multiple probed cells
     return _rank_topk(scored, k)
+
+
+def _nearest_cells(vecs, c_mat, n_cells: int):
+    """Indices of the ``n_cells`` nearest (cosine) rows of the unit-norm
+    centroid matrix ``c_mat`` for each vector, ties -> lower cell id."""
+    import numpy as np
+
+    m = np.array(list(vecs), dtype=np.float64)
+    m_n = m / np.linalg.norm(m, axis=1, keepdims=True)
+    return np.argsort(-(m_n @ c_mat.T), axis=1, kind="stable")[:, :n_cells]
+
+
+def _ivf_quantizer(corpus: DataFrame, n_centroids: int, id_col: str, vec_col: str):
+    """The IVF coarse quantizer shared by :func:`ivf_topk` and
+    :func:`ivf_write_bucketed`: the unit-normalized vectors of the
+    ``n_centroids`` corpus rows with the smallest xxhash64(id) (a seeded
+    pseudo-random sample, stable across runs), broadcast. Returns
+    ``(c_mat, assign)``; ``assign(df, n_cells)`` is one mapInPandas pass
+    emitting (id, vector, cell) once per each of a vector's ``n_cells``
+    nearest cells."""
+    import numpy as np
+
+    cent_rows = (
+        corpus.select(id_col, vec_col)
+        .orderBy(F.xxhash64(F.col(id_col)))
+        .limit(n_centroids)
+        .collect()
+    )
+    c_mat = np.array([r[1] for r in cent_rows], dtype=np.float64)
+    c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
+    bcent = corpus.sparkSession.sparkContext.broadcast(c_mat)
+
+    def assign(df: DataFrame, n_cells: int) -> DataFrame:
+        def run(batches):
+            import pandas as pd
+
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                order = _nearest_cells(pdf[vec_col], bcent.value, n_cells)
+                yield pd.DataFrame(
+                    {
+                        id_col: np.repeat(pdf[id_col].values, n_cells),
+                        vec_col: [
+                            v for v in pdf[vec_col] for _ in range(n_cells)
+                        ],
+                        "cell": order.ravel(),
+                    }
+                )
+
+        return df.select(id_col, vec_col).mapInPandas(
+            run, f"{id_col} long, {vec_col} array<float>, cell int"
+        )
+
+    return c_mat, assign
 
 
 def ivf_topk_replayable(
@@ -650,40 +661,8 @@ def ivf_write_bucketed(
     import json
     import os
 
-    import numpy as np
-
-    cent_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(n_centroids)
-        .collect()
-    )
-    c_mat = np.array([r[1] for r in cent_rows], dtype=np.float64)
-    c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-    sc = corpus.sparkSession.sparkContext
-    bcent = sc.broadcast(c_mat)
-
-    def assign(batches):
-        import pandas as pd
-
-        cm = bcent.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.array(list(pdf[vec_col]), dtype=np.float64)
-            m_n = m / np.linalg.norm(m, axis=1, keepdims=True)
-            cells = np.argsort(-(m_n @ cm.T), axis=1, kind="stable")[:, 0]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    vec_col: pdf[vec_col],
-                    "cell": cells.astype("int32"),
-                }
-            )
-
-    assigned = corpus.select(id_col, vec_col).mapInPandas(
-        assign, f"{id_col} long, {vec_col} array<float>, cell int"
-    )
+    c_mat, assign = _ivf_quantizer(corpus, n_centroids, id_col, vec_col)
+    assigned = assign(corpus, 1)
     assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
     with open(os.path.join(path, "_CENTROIDS.json"), "w") as fh:
         json.dump(c_mat.tolist(), fh)
@@ -714,14 +693,9 @@ def ivf_search_bucketed(
     with open(os.path.join(path, "_CENTROIDS.json")) as fh:
         c_mat = np.array(json.load(fh), dtype=np.float64)
     q_rows = queries.select(id_col, vec_col).collect()
-    probes: dict[int, list[int]] = {}
-    for r in q_rows:
-        v = np.array(r[1], dtype=np.float64)
-        v = v / np.linalg.norm(v)
-        cells = np.argsort(-(c_mat @ v), kind="stable")[:n_probe]
-        probes[r[0]] = [int(c) for c in cells]
+    cells = _nearest_cells([r[1] for r in q_rows], c_mat, n_probe) if q_rows else []
     probe_pairs = [
-        (qid, cell) for qid, cells in probes.items() for cell in cells
+        (r[0], int(c)) for r, row_cells in zip(q_rows, cells) for c in row_cells
     ]
     probed_cells = sorted({c for _, c in probe_pairs})
 
@@ -768,12 +742,12 @@ def embedding_near_dups_arrow(
 ) -> DataFrame:
     """Arrow fast path for embedding near-dup: hyperplane buckets, then one
     numpy gram matrix per bucket via ``applyInPandas`` (upper triangle ≥
-    threshold). Same results as ``embedding_near_dups`` at 6-decimal
-    rounding (``hash_family`` as on ``lsh_topk`` — "rademacher" makes the
-    bucketing engine-replayable; the numpy round-6 cosine already is, per
-    the attested cosine_topk_arrow pattern). Skew note: a degenerate
-    bucket lands on one task — split hot buckets with a secondary salt
-    when bucket-size monitoring trips."""
+    threshold), output (id_a, id_b, cos_sim) with id_a < id_b and the
+    cosine rounded to 6 decimals (``hash_family`` as on ``lsh_topk`` —
+    "rademacher" makes the bucketing engine-replayable; the numpy
+    round-6 cosine already is, per the attested cosine_topk_arrow
+    pattern). Skew note: a degenerate bucket lands on one task — split
+    hot buckets with a secondary salt when bucket-size monitoring trips."""
     import numpy as np
 
     b = df.select(
@@ -806,40 +780,6 @@ def embedding_near_dups_arrow(
         .applyInPandas(per_bucket, "id_a long, id_b long, cos_sim double")
         .distinct()
     )
-
-
-def embedding_near_dups(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 6,
-    seed: int = 42,
-    hash_family: str = "xx_float",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: bucket with hyperplane LSH,
-    verify exact cosine ≥ threshold within buckets. Output (id_a, id_b,
-    cos_sim), id_a < id_b. ``hash_family`` as on ``lsh_topk``."""
-    b = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        l2_norm(F.col(vec_col)).alias("nrm"),
-        _bucket_col(vec_col, dim, n_planes, seed, hash_family).alias("bucket"),
-    )
-    a, c = b.alias("a"), b.alias("c")
-    pairs = a.join(
-        c,
-        (F.col("a.bucket") == F.col("c.bucket"))
-        & (F.col("a.id") < F.col("c.id")),
-    ).select(
-        F.col("a.id").alias("id_a"),
-        F.col("c.id").alias("id_b"),
-        F.round(
-            dot(F.col("a.v"), F.col("c.v")) / (F.col("a.nrm") * F.col("c.nrm")), 6
-        ).alias("cos_sim"),
-    )
-    return pairs.filter(F.col("cos_sim") >= threshold).distinct()
 
 
 def mmr_select(

@@ -5,6 +5,8 @@ A failure here means a refactor changed the PHYSICAL plan for the worse
 results are still correct.
 """
 
+import os
+
 from local_data_pipeline_spark.plans.inspect import (
     broadcast_join_count,
     has_pushed_filter,
@@ -17,6 +19,7 @@ from local_data_pipeline_spark.plans.inspect import (
 from local_data_pipeline_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _df(spark, name):
@@ -476,7 +479,7 @@ def test_plan_linter_catalog_clean(spark):
     ALLOWLIST / S4_ALLOWLIST in tools/plan_lint.py."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.plan_lint import lint_queries
 
     bad = lint_queries()
@@ -487,19 +490,24 @@ def test_s4_tracer_catches_planted_collect(spark, tmp_path):
     """The S4 tracer must actually intercept (PySpark 4.x hands out
     pyspark.sql.classic DataFrames whose own collect overrides the
     abstract base — a base-only patch is a silent no-op, which is how
-    the rule shipped broken mid-round-5). Plant a package-namespace
-    helper that collects and assert it is flagged with its site."""
-    import os
+    the rule shipped broken mid-round-5). Plant a helper that collects,
+    in a directory the tracer attributes to the package (its path holds
+    the package name) but outside the checkout, and assert it is flagged
+    with its site."""
+    import importlib
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.plan_lint import trace_collects
 
-    probe = "/root/repo/local_data_pipeline_spark/_s4_probe.py"
-    with open(probe, "w") as fh:
-        fh.write("def bad_scalar(df):\n    return df.collect()[0][0]\n")
+    probe_dir = tmp_path / "local_data_pipeline_spark_probe"
+    probe_dir.mkdir()
+    (probe_dir / "_s4_probe.py").write_text(
+        "def bad_scalar(df):\n    return df.collect()[0][0]\n"
+    )
+    sys.path.insert(0, str(probe_dir))
     try:
-        import local_data_pipeline_spark._s4_probe as mod
+        mod = importlib.import_module("_s4_probe")
 
         with trace_collects() as findings:
             mod.bad_scalar(spark.range(3).agg({"id": "max"}))
@@ -515,8 +523,8 @@ def test_s4_tracer_catches_planted_collect(spark, tmp_path):
         spark.range(1).collect()
         assert f2 == []
     finally:
-        os.remove(probe)
-        sys.modules.pop("local_data_pipeline_spark._s4_probe", None)
+        sys.path.remove(str(probe_dir))
+        sys.modules.pop("_s4_probe", None)
 
 
 def test_auc_has_no_ranking_window(spark):

@@ -44,6 +44,27 @@ def test_label_propagation_deterministic_tiebreak(spark):
     assert got[1] == 2 and got[3] == 2
 
 
+def test_label_propagation_string_ids(spark):
+    """Labels of any orderable type: with string node ids, ties still
+    break to the smallest label and cliques converge to their minimum."""
+    pairs = [("x", "m"), ("m", "a")]
+    edges = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "src string, dst string"
+    )
+    got = {r.node: r.label for r in label_propagation(edges, iterations=1).collect()}
+    # "m" sees {"x", "a"} (tie) -> "a"; the endpoints see only "m"
+    assert got == {"m": "a", "x": "m", "a": "m"}
+    cliques = [
+        ("c1", "c2"), ("c1", "c3"), ("c2", "c3"),
+        ("d1", "d2"), ("d1", "d3"), ("d2", "d3"),
+    ]
+    edges = spark.createDataFrame(
+        cliques + [(b, a) for a, b in cliques], "src string, dst string"
+    )
+    got = {r.node: r.label for r in label_propagation(edges, iterations=4).collect()}
+    assert got == {n: n[0] + "1" for n in ("c1", "c2", "c3", "d1", "d2", "d3")}
+
+
 def test_label_propagation_partition_insensitive(spark):
     """Same communities at 1 and 13 shuffle partitions (determinism at
     any parallelism is what makes the unrolled oracle possible)."""

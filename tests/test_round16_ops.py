@@ -70,6 +70,37 @@ def test_signature_expr_cache_hits_and_results_stable(spark):
     assert DD._SIG_EXPR_CACHE[(32, "rk_pow5")] is before  # no rebuild
 
 
+def test_two_signature_outputs_join_and_union(spark):
+    """Two minhash_signature outputs built with the same parameters share
+    the memoized, already-aliased signature Column (one fixed expression
+    id). One plan holding both — a join on the signature and a union —
+    must still read each side's own rows."""
+    from local_data_pipeline_spark.operators import dedup as DD
+
+    a_df = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "one two three four")],
+        "doc_id long, text string",
+    )
+    b_df = spark.createDataFrame(
+        [(1, "one two three four"), (3, "alpha beta gamma delta")],
+        "doc_id long, text string",
+    )
+    a = DD.minhash_signature(a_df, hash_family="rk_pow5")
+    b = DD.minhash_signature(b_df, hash_family="rk_pow5")
+    sa = {r.doc_id: list(r.signature) for r in a.collect()}
+    sb = {r.doc_id: list(r.signature) for r in b.collect()}
+    assert sa[1] == sb[3] and sa[2] == sb[1] and sa[1] != sa[2]
+
+    same_sig = a.alias("a").join(
+        b.alias("b"), F.col("a.signature") == F.col("b.signature")
+    )
+    assert sorted(
+        (r[0], r[1]) for r in same_sig.select("a.doc_id", "b.doc_id").collect()
+    ) == [(1, 3), (2, 1)]
+    both = sorted((r.doc_id, list(r.signature)) for r in a.union(b).collect())
+    assert both == sorted(list(sa.items()) + list(sb.items()))
+
+
 def test_bucket_expr_cache_reuse_and_lsh_results_stable(spark):
     """_BUCKET_EXPR_CACHE: repeated lsh_topk calls reuse the bucket tree
     and return identical rankings."""

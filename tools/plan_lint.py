@@ -197,10 +197,6 @@ S4_ALLOWLIST: dict[tuple[str, str], str] = {
         "dim, a model constant) for the driver-side eigendecomposition; "
         "the corpus pass is one distributed aggregate."
     ),
-    ("clustering.py", "kmeans_fit"): (
-        "collects k*d centroids per iteration (k, d model constants); "
-        "assignment/update passes stay distributed."
-    ),
     ("clustering.py", "inertia"): (
         "collects a single global (keyless) aggregate row — the "
         "convergence metric."
